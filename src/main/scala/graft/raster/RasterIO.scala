@@ -41,9 +41,9 @@ trait RasterByteSource {
     * `.ovr` sidecar discovery). Empty when the URI isn't listable. */
   def list(uri: String): Seq[String]
 
-  /** The backing `java.io.File` when the URI is genuinely local — the
-    * fast path for JDK APIs that demand one (javax.imageio). Remote
-    * sources return None and callers fall back to stream access. */
+  /** The backing `java.io.File` when the URI is genuinely local, for
+    * APIs that demand one. Remote sources return None. The format
+    * decoders do not use it: every read goes through [[open]]. */
   def localFile(uri: String): Option[java.io.File]
 
   /** Credential-decoration seam for [[IoSession.restore]]: return a

@@ -150,8 +150,15 @@ abstract class WindowedReader extends RasterReader {
     }
   }
 
+  /** Scope of one source read: its subdataset resolution and every
+    * formatHeader/formatWindow/formatOverviews call run inside it. A
+    * format that parses its container once per read overrides this to
+    * hold that parse for the read, and drop it after. */
+  protected def withinRead[A](uri: String)(body: => A): A = body
+
   private def readImpl(src0: RasterSource, cfg: RasterLoadParams,
-                       dstGeobox: GeoBox, dstNodata: Double): Option[(Roi, Array[Double])] = {
+                       dstGeobox: GeoBox, dstNodata: Double)
+  : Option[(Roi, Array[Double])] = withinRead(src0.uri) {
     val src = resolveSource(src0)
     plan(src, cfg, dstGeobox) match {
       case None => None
@@ -606,12 +613,16 @@ object GrbReader extends WindowedReader {
     v.isNaN || nodata.exists(n => if (n.isNaN) v.isNaN else v == n)
 }
 
-/** GeoTIFF reader over the JDK's bundled `javax.imageio` TIFF plugin:
-  * windowed reads via `ImageReadParam.setSourceRegion`, geokeys from the
-  * TIFF tags, overview selection from reduced-resolution subimages
-  * (addressed as `uri#<image-index>`). See [[Tiff]] for the tag plumbing.
-  * Mirrors the reference's rasterio reader shape (`_rio.py:374-475`). */
+/** GeoTIFF reader on the direct tile reader ([[Tiff]], [[TiffFile]]):
+  * each source read opens its file once and parses its IFD chain once,
+  * then fetches only the tiles that intersect the window, in
+  * span-coalesced ranged reads. Geokeys come from the TIFF tags,
+  * overviews from reduced-resolution subimages (addressed as
+  * `uri#<image-index>`). Mirrors the reference's rasterio reader shape
+  * (`_rio.py:374-475`). */
 object TiffReader extends WindowedReader {
+  override protected def withinRead[A](uri: String)(body: => A): A =
+    Tiff.withinRead(uri)(body)
   /** Subdataset -> page-named image index (`path#<idx>`), loud on a
     * miss. A source cannot address BOTH an explicit image index and a
     * named subdataset. */

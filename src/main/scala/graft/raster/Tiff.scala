@@ -2,31 +2,39 @@ package graft.raster
 
 import graft.geo.{Affine, Crs, GeoBox}
 
-import java.awt.Rectangle
 import java.awt.color.ColorSpace
 import java.awt.image.{BufferedImage, ComponentColorModel, DataBuffer, Raster}
 import java.io.File
 import javax.imageio.{IIOImage, ImageIO, ImageTypeSpecifier, ImageWriteParam}
 import javax.imageio.plugins.tiff.{BaselineTIFFTagSet, TIFFDirectory, TIFFField, TIFFTag}
 
-/** GeoTIFF I/O on the JDK's bundled `javax.imageio` TIFF plugin (public
-  * API since Java 9: `javax.imageio.plugins.tiff`) — no GDAL required.
+/** GeoTIFF I/O with no GDAL: a direct tile reader ([[TiffFile]]) over the
+  * [[RasterIO]] byte seam, and a writer on the JDK's bundled
+  * `javax.imageio` TIFF plugin.
   *
-  * Read side (what [[TiffReader]] consumes):
+  * Read side (what [[TiffReader]] and the `gtiff`/`raster` sources use):
+  *  - one open and one IFD parse per call, or per [[TiffReader]] source
+  *    read when it runs inside [[withinRead]]; nothing parsed is cached
+  *    past that, so a file rewritten in place is never read stale;
   *  - geo-referencing from ModelPixelScaleTag (33550) + ModelTiepointTag
   *    (33922), CRS from the GeoKeyDirectoryTag (34735) projected/
   *    geographic EPSG keys, nodata from GDAL_NODATA (42113) — the same
   *    tags rasterio reads for the reference (`_rio.py:374-475`);
-  *  - **windowed reads**: `ImageReadParam.setSourceRegion` decodes only
-  *    the tiles/strips intersecting the window — the COG access pattern;
+  *  - **windowed reads** fetch only the intersecting tiles/strips, in
+  *    span-coalesced positioned reads (ranged GETs over HTTP), and decode
+  *    them directly; encodings the direct decoder lacks (JPEG, PackBits,
+  *    the floating-point predictor) decode through javax.imageio over the
+  *    same open input;
   *  - **overview pyramid**: reduced-resolution subimages (additional
   *    IFDs), addressed as `path#<imageIndex>`; their geobox derives from
-  *    the base image's (GDAL writes geo tags on the base IFD only).
+  *    the nearest preceding geo-tagged IFD (GDAL writes geo tags on the
+  *    base IFD only);
+  *  - **subdatasets**: page-named images addressed as `path#<name>`.
   *
   * Write side exists for fixtures/tests and as the S10 sink analog:
   * tiled (multiples-of-16) or stripped layout, optional overview IFDs.
   * Supported dtypes: uint8, uint16, int16, int32, float32, float64
-  * (TIFF SampleFormat 1/2/3). Single-band, axis-aligned north-up grids.
+  * (TIFF SampleFormat 1/2/3). Axis-aligned north-up grids.
   */
 object Tiff {
 
@@ -43,69 +51,58 @@ object Tiff {
   private val GeographicTypeGeoKey = 2048
   private val ProjectedCSTypeGeoKey = 3072
 
-  /** Split `path#idx` or `path#name` into (path, image index) — a
-    * non-numeric fragment is a subdataset NAME, resolved via PageName
-    * (cached: raster stores are immutable, and at scale every container
-    * open is an object-store round trip). Makes every entry point
-    * (readHeader/readWindow/numBands and the `gtiff` DSv2 source)
-    * accept named-subdataset URIs. */
-  private def splitUri(uri: String): (String, Int) = {
+  /** The file a [[TiffReader]] source read holds open, so that its
+    * header, window and overview calls share one open and one parse. */
+  private final class ReadScope(val path: String) { var file: TiffFile = _ }
+  private val readScope = new ThreadLocal[ReadScope]
+
+  /** `path#fragment` -> (path, fragment); the fragment is "0" (the base
+    * image) when absent. */
+  private def split(uri: String): (String, String) = {
     val i = uri.lastIndexOf('#')
-    if (i < 0) (uri, 0)
-    else {
-      val path = uri.substring(0, i)
-      val frag = uri.substring(i + 1)
-      if (frag.nonEmpty && frag.forall(_.isDigit)) (path, frag.toInt)
-      else (path, subdatasetIdxCache.computeIfAbsent(
-        (path, frag), _ => resolveSubdatasetUncached(path, frag)))
+    if (i < 0) (uri, "0") else (uri.substring(0, i), uri.substring(i + 1))
+  }
+
+  /** Run `body` (one source read) with `uri`'s file opened at most once:
+    * every call on that path inside it reuses the open input and the IFDs
+    * parsed so far. The file is closed, and its parse dropped, on exit. */
+  def withinRead[A](uri: String)(body: => A): A = {
+    val outer = readScope.get
+    val scope = new ReadScope(split(uri)._1.stripPrefix("file://"))
+    readScope.set(scope)
+    try body
+    finally {
+      readScope.set(outer)
+      if (scope.file != null) scope.file.close()
     }
   }
 
-  private val subdatasetIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Integer]()
-
-  /** (path, overview idx) -> index of the geo-tag-carrying parent IFD. */
-  private val parentIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Integer]()
-
-  private def withReader[A](uri: String)(f: (javax.imageio.ImageReader, Int) => A): A = {
-    val (path, idx) = splitUri(uri)
-    // remote-IO seam: ImageIO wants a File; non-local sources fall back
-    // to a stream over the byte channel (MemoryCache-backed, seekable)
-    val iis = RasterIO.localFile(path) match {
-      case Some(f) => ImageIO.createImageInputStream(f)
-      case None =>
-        val in = RasterIO.open(path)
-        ImageIO.createImageInputStream(new java.io.InputStream {
-          def read(): Int = in.read()
-          override def read(b: Array[Byte], off: Int, len: Int): Int = {
-            val buf = if (off == 0 && len == b.length) b else new Array[Byte](len)
-            val n = in.read(buf)
-            if (n > 0 && (buf ne b)) System.arraycopy(buf, 0, b, off, n)
-            n
-          }
-          override def close(): Unit = in.close()
-        })
+  private def withFile[A](path: String)(f: TiffFile => A): A =
+    readScope.get match {
+      case s if s != null && s.path == path.stripPrefix("file://") =>
+        if (s.file == null) s.file = TiffFile.open(path)
+        f(s.file)
+      case _ =>
+        val tf = TiffFile.open(path)
+        try f(tf) finally tf.close()
     }
-    require(iis != null, s"cannot open $path")
-    try {
-      val readers = ImageIO.getImageReaders(iis)
-      require(readers.hasNext, s"no TIFF reader for $path")
-      val reader = readers.next()
-      reader.setInput(iis, false, false)
-      try f(reader, idx) finally reader.dispose()
-    } finally iis.close()
+
+  /** Open `path#idx` or `path#name` and hand over (file, image index) — a
+    * non-numeric fragment is a subdataset NAME, resolved via PageName on
+    * the same parse. Every entry point (readHeader/readWindow/numBands,
+    * the `gtiff` source) accepts named-subdataset URIs this way. */
+  private def withImage[A](uri: String)(f: (TiffFile, Int) => A): A = {
+    val (path, frag) = split(uri)
+    withFile(path) { tf =>
+      f(tf, if (frag.nonEmpty && frag.forall(_.isDigit)) frag.toInt
+            else subdatasetIndex(tf, frag))
+    }
   }
 
   /** Sample-band count of the addressed image (1 for grayscale, 3 for
     * RGB, N for packed multispectral stacks). */
-  def numBands(uri: String): Int = withReader(uri) { (reader, idx) =>
-    samplesPerPixel(TIFFDirectory.createFromMetadata(reader.getImageMetadata(idx)))
-  }
-
-  private def pageNameOf(reader: javax.imageio.ImageReader, i: Int): Option[String] =
-    Option(TIFFDirectory.createFromMetadata(reader.getImageMetadata(i))
-      .getTIFFField(TagPageName)).map(_.getAsString(0))
+  def numBands(uri: String): Int = withImage(uri)((tf, idx) =>
+    tf.ifd(idx).samplesPerPixel)
 
   /** Resolve a named subdataset to its image index by PageName (tag 285)
     * — multi-image TIFF containers are the zero-GDAL analog of the
@@ -114,117 +111,88 @@ object Tiff {
     * miss fails loudly listing what the container actually has, like the
     * band path (`readHeader`'s SamplesPerPixel validation). */
   def resolveSubdataset(path: String, name: String): Int =
-    subdatasetIdxCache.computeIfAbsent(
-      (path, name), _ => resolveSubdatasetUncached(path, name))
+    withFile(path)(subdatasetIndex(_, name))
 
-  private def resolveSubdatasetUncached(path: String, name: String): Int =
-    withReader(path) { (reader, _) =>
-      val n = reader.getNumImages(true)
-      val names = (0 until n).map(i => pageNameOf(reader, i))
-      names.indexWhere(_.contains(name)) match {
-        case -1 => throw new IllegalArgumentException(
-          s"subdataset '$name' not found in $path; available: " +
-            (names.flatten match {
-              case Seq() => "none (container has no named subdatasets)"
-              case ns => ns.mkString("'", "', '", "'")
-            }))
-        case i => i
-      }
+  private def subdatasetIndex(tf: TiffFile, name: String): Int = {
+    val names = tf.all.map(_.pageName)
+    names.indexWhere(_.contains(name)) match {
+      case -1 => throw new IllegalArgumentException(
+        s"subdataset '$name' not found in ${tf.path}; available: " +
+          (names.flatten match {
+            case Seq() => "none (container has no named subdatasets)"
+            case ns => ns.mkString("'", "', '", "'")
+          }))
+      case i => i
     }
+  }
 
   /** Names of the container's subdatasets (page-named images), in image
     * order. */
   def subdatasetNames(path: String): Seq[String] =
-    withReader(path) { (reader, _) =>
-      (0 until reader.getNumImages(true)).flatMap(i => pageNameOf(reader, i))
-    }
+    withFile(path)(_.all.flatMap(_.pageName))
+
+  private def requireBand(uri: String, band: Int, nBands: Int): Unit =
+    require(band >= 1 && band <= nBands,
+      s"band $band requested of $uri with $nBands sample band(s)")
 
   /** Header of the addressed image. Overview IFDs (idx > 0) carry no geo
     * tags; their geobox is the base geobox decimated by the size ratio.
     * `band` (1-based) validates against SamplesPerPixel — a request for
     * band 3 of a single-band file must fail loudly, not read band 1
     * (reference `loader/types.py:40-70` RasterSource.band). */
-  def readHeader(uri: String, band: Int = 1): Grb.Header = withReader(uri) { (reader, idx) =>
-    val w = reader.getWidth(idx)
-    val h = reader.getHeight(idx)
-    val dir = TIFFDirectory.createFromMetadata(reader.getImageMetadata(idx))
-    val nBands = samplesPerPixel(dir)
-    require(band >= 1 && band <= nBands,
-      s"band $band requested of $uri with $nBands sample band(s)")
-    val dtype = dtypeOf(dir)
+  def readHeader(uri: String, band: Int = 1): Grb.Header = withImage(uri) { (tf, idx) =>
+    val dir = tf.ifd(idx)
+    requireBand(uri, band, dir.samplesPerPixel)
     // An idx > 0 IFD with its OWN ModelPixelScale is a standalone
     // subdataset image (multi-image container); one without is a
     // reduced-resolution overview deriving georeferencing from its
     // PARENT — the nearest preceding IFD that carries geo tags (the
     // base image, or the subdataset the overview belongs to: GDAL lays
     // a subdataset's pyramid out as the unnamed IFDs following it).
-    val standalone = idx == 0 || dir.getTIFFField(TagModelPixelScale) != null
-    // parent resolution decodes up to idx-1 IFD metadatas — cached per
-    // (path, idx) like the name cache (immutable stores; container
-    // opens are object-store round trips at scale)
-    val geoIdx: Int =
-      if (standalone) idx
-      else parentIdxCache.computeIfAbsent((splitUri(uri)._1, idx), _ =>
-        (idx - 1 to 0 by -1).find { i =>
-          i == 0 || TIFFDirectory.createFromMetadata(reader.getImageMetadata(i))
-            .getTIFFField(TagModelPixelScale) != null
-        }.get)
+    val standalone = idx == 0 || dir.pixelScale.isDefined
     val geoDir =
       if (standalone) dir
-      else TIFFDirectory.createFromMetadata(reader.getImageMetadata(geoIdx))
-    // the JDK reader filters tags outside its allowed TagSets out of the
-    // metadata (GDAL_NODATA is no baseline/GeoTIFF tag), so fall back to a
-    // raw scan of the geo-carrying IFD for it
-    val nodata = Option(geoDir.getTIFFField(TagGdalNodata))
-      .map(_.getAsString(0))
-      .orElse(rawAsciiTag(splitUri(uri)._1, TagGdalNodata, geoIdx))
-      .map(_.trim)
-      .flatMap(s => if (s.equalsIgnoreCase("nan")) Some(Double.NaN)
-                    else s.toDoubleOption)
+      else tf.ifd((idx - 1 to 0 by -1).find(i =>
+        i == 0 || tf.ifd(i).pixelScale.isDefined).get)
+    val nodata = geoDir.nodata.map(parseNodata(uri, _))
     val gbox =
-      if (standalone) geoboxOf(geoDir, w, h)
+      if (standalone) geoboxOf(uri, geoDir)
       else {
         // decimated level: same origin, linear part scaled by size ratio
-        val parentGbox = geoboxOf(geoDir,
-          reader.getWidth(geoIdx), reader.getHeight(geoIdx))
-        val sx = parentGbox.width.toDouble / w
-        val sy = parentGbox.height.toDouble / h
+        val parentGbox = geoboxOf(uri, geoDir)
+        val sx = parentGbox.width.toDouble / dir.width
+        val sy = parentGbox.height.toDouble / dir.height
         val t = parentGbox.transform
-        GeoBox(w, h, Affine(t.a * sx, t.b * sx, t.c, t.d * sy, t.e * sy, t.f),
-          parentGbox.crs)
+        GeoBox(dir.width, dir.height,
+          Affine(t.a * sx, t.b * sx, t.c, t.d * sy, t.e * sy, t.f), parentGbox.crs)
       }
-    Grb.Header(dtype, w, h, nodata, gbox, 0L)
+    Grb.Header(dir.dtype, dir.width, dir.height, nodata, gbox, 0L)
   }
 
-  /** Windowed read of one band: decodes only the region's tiles/strips.
-    * Row-major doubles, unsigned types widened. `band` is 1-based —
-    * multi-band files (RGB/MSI packed into one asset) address plane
-    * `band-1` of the decoded raster; `setSourceBands` restricts the
-    * decode itself to that plane for planar or banded layouts. */
+  /** GDAL_NODATA is ASCII; GDAL writes "nan"/"inf" spellings. A tag that
+    * is present but unparsable fails: dropping it would turn nodata
+    * pixels into valid data. */
+  private def parseNodata(uri: String, raw: String): Double =
+    raw.trim.toLowerCase match {
+      case "nan" | "+nan" | "-nan" => Double.NaN
+      case "inf" | "+inf" | "infinity" | "+infinity" => Double.PositiveInfinity
+      case "-inf" | "-infinity" => Double.NegativeInfinity
+      case s => s.toDoubleOption.getOrElse(throw new IllegalArgumentException(
+        s"$uri: GDAL_NODATA tag '$raw' is not a number"))
+    }
+
+  /** Windowed read of one band: fetches and decodes only the window's
+    * tiles/strips. Row-major doubles, unsigned types widened. `band` is
+    * 1-based — multi-band files (RGB/MSI packed into one asset) address
+    * sample `band-1` of each pixel, or plane `band-1` when planar. */
   def readWindow(uri: String, x0: Int, y0: Int, w: Int, h: Int,
                  band: Int = 1): Array[Double] =
-    withReader(uri) { (reader, idx) =>
-      require(x0 >= 0 && y0 >= 0 && x0 + w <= reader.getWidth(idx) &&
-        y0 + h <= reader.getHeight(idx),
-        s"window ($x0,$y0,$w,$h) out of bounds " +
-          s"${reader.getWidth(idx)}x${reader.getHeight(idx)}")
-      val param = reader.getDefaultReadParam
-      param.setSourceRegion(new Rectangle(x0, y0, w, h))
-      if (band != 1) {
-        val dir = TIFFDirectory.createFromMetadata(reader.getImageMetadata(idx))
-        val nBands = samplesPerPixel(dir)
-        require(band >= 1 && band <= nBands,
-          s"band $band requested of $uri with $nBands sample band(s)")
-      }
-      // decode the window (all samples — interleaved layouts decode rows
-      // anyway) and extract the addressed plane from the raster
-      val img = reader.read(idx, param)
-      val out = new Array[Double](w * h)
-      img.getRaster.getSamples(0, 0, w, h, band - 1, out)
-      // JDK raster samples come back sign-extended only for signed buffer
-      // types; unsigned 8/16-bit arrive already widened. int64 is not a
-      // TIFF baseline type, so no masking is needed here.
-      out
+    withImage(uri) { (tf, idx) =>
+      val dir = tf.ifd(idx)
+      require(x0 >= 0 && y0 >= 0 && x0 + w <= dir.width && y0 + h <= dir.height,
+        s"window ($x0,$y0,$w,$h) out of bounds ${dir.width}x${dir.height}")
+      requireBand(uri, band, dir.samplesPerPixel)
+      tf.window(idx, x0, y0, w, h, band)
     }
 
   /** Decimation levels of the addressed image: (scale, uri). A pyramid
@@ -232,116 +200,42 @@ object Tiff {
     * its full image (the GDAL container layout — a subdataset's
     * overviews sit between it and the next page-named image), so this
     * works for the base image and for `#`-addressed subdatasets alike. */
-  def overviewLevels(uri: String): Seq[(Int, String)] = withReader(uri) {
-    (reader, idx) =>
-      val (path, _) = splitUri(uri)
-      val n = reader.getNumImages(true)
-      val baseW = reader.getWidth(idx)
-      Iterator.from(idx + 1).takeWhile(i =>
-        i < n && pageNameOf(reader, i).isEmpty).map { i =>
-        math.round(baseW.toDouble / reader.getWidth(i)).toInt -> s"$path#$i"
-      }.toSeq.sortBy(_._1)
+  def overviewLevels(uri: String): Seq[(Int, String)] = withImage(uri) { (tf, idx) =>
+    val path = split(uri)._1
+    val baseW = tf.ifd(idx).width
+    Iterator.from(idx + 1).map(i => i -> tf.ifdOption(i))
+      .takeWhile { case (_, d) => d.exists(_.pageName.isEmpty) }
+      .map { case (i, d) => math.round(baseW.toDouble / d.get.width).toInt -> s"$path#$i" }
+      .toSeq.sortBy(_._1)
   }
 
-  /** Minimal raw scan of the `ifdIdx`-th IFD for an ASCII tag the
-    * plugin's metadata filter dropped. Classic TIFF only (BigTIFF would
-    * arrive via a different magic); handles both byte orders and inline
-    * values. */
-  private def rawAsciiTag(path: String, tagNum: Int,
-                          ifdIdx: Int = 0): Option[String] = {
-    val raf = RasterIO.open(path)
-    try {
-      val b0 = raf.read(); val b1 = raf.read()
-      val le = b0 == 'I' && b1 == 'I'
-      def u16(): Int = {
-        val a = raf.read(); val b = raf.read()
-        if (le) a | (b << 8) else (a << 8) | b
-      }
-      def u32(): Long = {
-        val a = u16().toLong; val b = u16().toLong
-        if (le) a | (b << 16) else (a << 16) | b
-      }
-      if (u16() != 42) return None
-      var ifdOff = u32()
-      var skip = ifdIdx
-      while (skip > 0) {
-        if (ifdOff == 0) return None
-        raf.seek(ifdOff)
-        val entries = u16()
-        raf.seek(ifdOff + 2 + entries * 12L) // 12 bytes per IFD entry
-        ifdOff = u32()
-        skip -= 1
-      }
-      if (ifdOff == 0) return None
-      raf.seek(ifdOff)
-      val n = u16()
-      var i = 0
-      while (i < n) {
-        val tag = u16(); val tpe = u16(); val cnt = u32()
-        if (tag == tagNum && tpe == 2) {
-          val bytes = new Array[Byte](cnt.toInt)
-          if (cnt <= 4) raf.readFully(bytes)
-          else { raf.seek(u32()); raf.readFully(bytes) }
-          return Some(new String(bytes, "US-ASCII").takeWhile(_ != '\u0000'))
-        }
-        u32() // skip value/offset
-        i += 1
-      }
-      None
-    } catch { case _: Exception => None }
-    finally raf.close()
-  }
-
-  private def samplesPerPixel(dir: TIFFDirectory): Int =
-    Option(dir.getTIFFField(BaselineTIFFTagSet.TAG_SAMPLES_PER_PIXEL))
-      .map(_.getAsInt(0)).getOrElse(1)
-
-  private def dtypeOf(dir: TIFFDirectory): String = {
-    def intField(tag: Int, dflt: Int): Int =
-      Option(dir.getTIFFField(tag)).map(_.getAsInt(0)).getOrElse(dflt)
-    val bits = intField(BaselineTIFFTagSet.TAG_BITS_PER_SAMPLE, 8)
-    val fmt = intField(BaselineTIFFTagSet.TAG_SAMPLE_FORMAT, 1)
-    (bits, fmt) match {
-      case (8, 1) => "uint8"
-      case (8, 2) => "int8"
-      case (16, 1) => "uint16"
-      case (16, 2) => "int16"
-      case (32, 2) => "int32"
-      case (32, 3) => "float32"
-      case (64, 3) => "float64"
-      case other => throw new IllegalArgumentException(
-        s"unsupported TIFF sample layout (bits, format) = $other")
-    }
-  }
-
-  private def geoboxOf(dir: TIFFDirectory, w: Int, h: Int): GeoBox = {
-    val scale = Option(dir.getTIFFField(TagModelPixelScale)).getOrElse(
-      throw new IllegalArgumentException("TIFF has no ModelPixelScaleTag"))
-    val tie = Option(dir.getTIFFField(TagModelTiepoint)).getOrElse(
-      throw new IllegalArgumentException("TIFF has no ModelTiepointTag"))
-    val (sx, sy) = (scale.getAsDouble(0), scale.getAsDouble(1))
+  private def geoboxOf(uri: String, dir: TiffIfd): GeoBox = {
+    val scale = dir.pixelScale.getOrElse(
+      throw new IllegalArgumentException(s"$uri: TIFF has no ModelPixelScaleTag"))
+    val tie = dir.tiepoint.getOrElse(
+      throw new IllegalArgumentException(s"$uri: TIFF has no ModelTiepointTag"))
+    val (sx, sy) = (scale(0), scale(1))
     // tiepoint: raster (i,j,k) -> model (x,y,z)
-    val (ti, tj) = (tie.getAsDouble(0), tie.getAsDouble(1))
-    val (tx, ty) = (tie.getAsDouble(3), tie.getAsDouble(4))
+    val (ti, tj) = (tie(0), tie(1))
+    val (tx, ty) = (tie(3), tie(4))
     val ox = tx - ti * sx
     val oy = ty + tj * sy
-    GeoBox(w, h, Affine.grid(ox, oy, sx, -sy), crsOf(dir))
+    GeoBox(dir.width, dir.height, Affine.grid(ox, oy, sx, -sy), crsOf(uri, dir))
   }
 
-  private def crsOf(dir: TIFFDirectory): Crs = {
-    val gk = Option(dir.getTIFFField(TagGeoKeyDirectory)).getOrElse(
-      throw new IllegalArgumentException("TIFF has no GeoKeyDirectoryTag"))
+  private def crsOf(uri: String, dir: TiffIfd): Crs = {
+    val gk = dir.geoKeys.getOrElse(
+      throw new IllegalArgumentException(s"$uri: TIFF has no GeoKeyDirectoryTag"))
     // entries of 4 shorts: (keyId, tagLocation, count, value)
     def keyValue(keyId: Int): Option[Int] =
-      (4 until gk.getCount by 4).collectFirst {
-        case i if gk.getAsInt(i) == keyId && gk.getAsInt(i + 1) == 0 =>
-          gk.getAsInt(i + 3)
+      (4 until gk.length - 3 by 4).collectFirst {
+        case i if gk(i) == keyId && gk(i + 1) == 0 => gk(i + 3)
       }
     keyValue(ProjectedCSTypeGeoKey)
       .orElse(keyValue(GeographicTypeGeoKey))
       .map(epsg => Crs.parse(s"EPSG:$epsg"))
       .getOrElse(throw new IllegalArgumentException(
-        "GeoKeyDirectory has no projected/geographic EPSG key"))
+        s"$uri: GeoKeyDirectory has no projected/geographic EPSG key"))
   }
 
   // ---- writer (fixtures + S10 sink analog) ---------------------------------

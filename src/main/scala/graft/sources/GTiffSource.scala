@@ -13,9 +13,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * (`spark.read.format("gtiff")`) — the real-container sibling of the
   * `grb` source (SURVEY §4 "COG table"). All scan machinery (ROI/band/
   * uri pushdown, row-band partition planning, column-pruned emit) is
-  * the shared [[PixelScan]] skeleton; the TIFF decode touches only the
-  * window's tiles/strips (`ImageReadParam.setSourceRegion` — the COG
-  * access pattern), and multi-band stacks plan only addressed planes.
+  * the shared [[PixelScan]] skeleton; the TIFF decode fetches and
+  * decodes only the window's tiles/strips (the direct tile reader behind
+  * `Tiff.readWindow` — the COG access pattern), and multi-band stacks
+  * plan only addressed planes.
   *
   * Row shape: `(uri, band, x, y, wx, wy, value, nodata)` — one row per
   * pixel per addressed band, joinable with everything in the engine.
